@@ -11,6 +11,8 @@ drift.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -518,28 +520,35 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_cluster_components",
-    # the recursive member requires the RECURSIVE keyword on the WHOLE
-    # CTE chain, so patch the shared prefix
-    oracle=_SHINGLE_CTES.replace("WITH sh AS", "WITH RECURSIVE sh AS", 1) + """
-    , sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-    inter AS (
+# The connected-components oracles (this one, dedup_cluster_canonical
+# and, through this one, corpus_dedup_rate_by_source) share this CTE
+# chain. DuckDB 1.0 inlines every reference to a plain CTE, so the
+# shingle chain was recomputed for each one (50-75 s per oracle at
+# sf0.001). MATERIALIZED computes each non-recursive CTE once; the rows
+# are the same. The recursive member requires the RECURSIVE keyword on
+# the WHOLE CTE chain, so the shared prefix is patched.
+_COMPONENT_CTES = re.sub(
+    r"\b(sh|sigs|buckets|cands) AS \(",
+    r"\1 AS MATERIALIZED (",
+    _SHINGLE_CTES.replace("WITH sh AS", "WITH RECURSIVE sh AS", 1),
+) + """
+    , sizes AS MATERIALIZED (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
+    inter AS MATERIALIZED (
       SELECT c.id1, c.id2, COUNT(*) AS i
       FROM cands c
       JOIN sh s1 ON s1.id = c.id1
       JOIN sh s2 ON s2.id = c.id2 AND s2.sh = s1.sh
       GROUP BY c.id1, c.id2
     ),
-    edges AS (
+    edges AS MATERIALIZED (
       SELECT i.id1, i.id2
       FROM inter i
       JOIN sizes n1 ON n1.id = i.id1
       JOIN sizes n2 ON n2.id = i.id2
       WHERE CAST(i.i AS DOUBLE) / CAST(n1.n + n2.n - i.i AS DOUBLE) >= 0.8
     ),
-    nodes AS (SELECT id1 AS id FROM edges UNION SELECT id2 FROM edges),
-    undirected AS (
+    nodes AS MATERIALIZED (SELECT id1 AS id FROM edges UNION SELECT id2 FROM edges),
+    undirected AS MATERIALIZED (
       SELECT id1 AS a, id2 AS b FROM edges
       UNION SELECT id2, id1 FROM edges
     ),
@@ -548,6 +557,12 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION
       SELECT u.b, r.root FROM reach r JOIN undirected u ON u.a = r.id
     )
+"""
+
+
+@register(
+    "dedup_cluster_components",
+    oracle=_COMPONENT_CTES + """
     SELECT id, MIN(root) AS component FROM reach GROUP BY id
     """,
 )
@@ -1190,33 +1205,8 @@ def dedup_prefix_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_cluster_canonical",
-    oracle=_SHINGLE_CTES.replace("WITH sh AS", "WITH RECURSIVE sh AS", 1) + f"""
-    , sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-    inter AS (
-      SELECT c.id1, c.id2, COUNT(*) AS i
-      FROM cands c
-      JOIN sh s1 ON s1.id = c.id1
-      JOIN sh s2 ON s2.id = c.id2 AND s2.sh = s1.sh
-      GROUP BY c.id1, c.id2
-    ),
-    edges AS (
-      SELECT i.id1, i.id2
-      FROM inter i
-      JOIN sizes n1 ON n1.id = i.id1
-      JOIN sizes n2 ON n2.id = i.id2
-      WHERE CAST(i.i AS DOUBLE) / CAST(n1.n + n2.n - i.i AS DOUBLE) >= 0.8
-    ),
-    nodes AS (SELECT id1 AS id FROM edges UNION SELECT id2 FROM edges),
-    undirected AS (
-      SELECT id1 AS a, id2 AS b FROM edges
-      UNION SELECT id2, id1 FROM edges
-    ),
-    reach(id, root) AS (
-      SELECT id, id FROM nodes
-      UNION
-      SELECT u.b, r.root FROM reach r JOIN undirected u ON u.a = r.id
-    ),
-    comp AS (SELECT id, MIN(root) AS component FROM reach GROUP BY id),
+    oracle=_COMPONENT_CTES + f"""
+    , comp AS (SELECT id, MIN(root) AS component FROM reach GROUP BY id),
     quality AS (
       SELECT doc_id, (0.4 * {_STOPRATIO}
             + 0.3 * least({_AVGLEN} / 10.0, 1.0)

@@ -14,9 +14,12 @@ from __future__ import annotations
 
 import os
 import tempfile
+import weakref
 import zipfile
 
-_shipped_contexts: set[int] = set()
+# Held weakly: a dead context leaves no entry for a new context that
+# reuses its id() to match.
+_shipped_contexts: weakref.WeakSet = weakref.WeakSet()
 
 
 def _build_zip() -> str:
@@ -40,8 +43,7 @@ def _build_zip() -> str:
 def ship_package(spark) -> None:
     """Idempotently attach the package zip to the session's SparkContext."""
     sc = spark.sparkContext
-    key = id(sc)
-    if key in _shipped_contexts:
+    if sc in _shipped_contexts:
         return
     sc.addPyFile(_build_zip())
-    _shipped_contexts.add(key)
+    _shipped_contexts.add(sc)

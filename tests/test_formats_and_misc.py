@@ -1,6 +1,7 @@
 """File-format scan coverage (CSV/JSON/ORC round-trips through Spark),
 the .avsc schema loader (S2), console sink (K3) smoke, approx-distinct
-accuracy, and the applyInPandas custom aggregate vs its window twin."""
+accuracy, the applyInPandas custom aggregate vs its window twin, and
+the once-per-context package shipping."""
 
 from __future__ import annotations
 
@@ -171,3 +172,29 @@ def test_hll_sketch_partial_union_equals_direct(spark, sf_small):
 
     assert merged == direct  # same sketch algebra, same buckets
     assert abs(merged - exact) / exact < 0.05, (merged, exact)
+
+
+def test_ship_package_ships_every_new_context_once(monkeypatch):
+    """``ship_package`` attaches the zip once per SparkContext, and a new
+    context is shipped even when it reuses the ``id()`` of a dead one."""
+    from types import SimpleNamespace
+
+    from kafka_avro_order_processor_eg_4131_spark import shipping
+
+    monkeypatch.setattr(shipping, "_build_zip", lambda: "pkg.zip")
+
+    class StubContext:
+        def __init__(self) -> None:
+            self.shipped: list[str] = []
+
+        def addPyFile(self, path: str) -> None:
+            self.shipped.append(path)
+
+    # CPython hands a freed object's memory to the next object of its
+    # size, so the contexts of this loop keep recycling one another's ids
+    for _ in range(20):
+        sc = StubContext()
+        shipping.ship_package(SimpleNamespace(sparkContext=sc))
+        shipping.ship_package(SimpleNamespace(sparkContext=sc))
+        assert sc.shipped == ["pkg.zip"]
+        del sc

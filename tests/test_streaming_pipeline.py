@@ -175,3 +175,222 @@ def test_observed_metrics_match_reference_counters(spark, tmp_path, envelope_dir
         f32(p) for _, _, p in FROZEN_ORDERS if not (5.0 <= p <= 50.0) and p <= 1000.0
     )
     assert abs(total_price - expected) < 1e-9
+
+
+# ---------------------------------------------------------------------------
+# micro-batch splits are sized by bytes, and the caller's conf survives
+# ---------------------------------------------------------------------------
+
+SPLIT_KEYS = (
+    "spark.sql.files.minPartitionNum",
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+)
+
+
+def _write_envelope_files(path, n_files: int, rows_per_file: int, key_bytes=0) -> int:
+    """``n_files`` envelope parquet files of OCF-framed orders; each key
+    carries ``key_bytes`` random bytes, to give a file real size."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path.mkdir()
+    offset = 0
+    for f in range(n_files):
+        oids = [f"o-{f}-{i}" for i in range(rows_per_file)]
+        blobs = [
+            ocf_encode(
+                ORDER_AVRO_SCHEMA,
+                [{"orderId": oid, "product": "Amber Wallet", "price": 4.99 + i}],
+            )
+            for i, oid in enumerate(oids)
+        ]
+        table = pa.table(
+            {
+                "key": pa.array(
+                    [o.encode() + os.urandom(key_bytes) for o in oids], pa.binary()
+                ),
+                "value": pa.array(blobs, pa.binary()),
+                "topic": pa.array(["orders"] * rows_per_file, pa.string()),
+                "partition": pa.array([0] * rows_per_file, pa.int32()),
+                "offset": pa.array(range(offset, offset + rows_per_file), pa.int64()),
+            }
+        )
+        pq.write_table(table, str(path / f"part-{f:05d}.parquet"))
+        offset += rows_per_file
+    return offset
+
+
+@pytest.fixture()
+def batch_partitions(monkeypatch):
+    """Partition count of every micro-batch ``process_batch`` receives.
+    The foreachBatch lambda looks ``process_batch`` up at call time."""
+    from kafka_avro_order_processor_eg_4131_spark.streaming import pipeline
+
+    seen: list[int] = []
+    real = pipeline.process_batch
+
+    def recording(batch, batch_id, sinks):
+        seen.append(batch.rdd.getNumPartitions())
+        return real(batch, batch_id, sinks)
+
+    monkeypatch.setattr(pipeline, "process_batch", recording)
+    return seen
+
+
+def _split_conf(spark) -> dict:
+    return {k: spark.conf.get(k, None) for k in SPLIT_KEYS}
+
+
+def _set_split_conf(spark, values: dict) -> None:
+    for k, v in values.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+def test_small_micro_batch_is_one_split(spark, tmp_path, batch_partitions):
+    """Eight small files in one micro-batch arrive as ONE partition (one
+    decode task, one file per sink), not one per core."""
+    from kafka_avro_order_processor_eg_4131_spark.streaming.pipeline import (
+        run_order_pipeline,
+    )
+
+    n_rows = _write_envelope_files(tmp_path / "input", 8, 16)
+    observed: list = []
+    run_order_pipeline(
+        spark, str(tmp_path / "input"), str(tmp_path / "work"), observed_metrics=observed
+    )
+    assert batch_partitions == [1]
+    assert sum(m["message_count"] for m in observed) == n_rows
+    assert len(spark.read.parquet(str(tmp_path / "work" / "success")).inputFiles()) == 1
+
+
+def test_micro_batch_larger_than_a_split_still_splits(
+    spark, tmp_path, batch_partitions
+):
+    """The split rule is by bytes: three ~1.2 MB files do not fit in one
+    split, so a large drain keeps its parallelism, and every row is
+    still routed once."""
+    from kafka_avro_order_processor_eg_4131_spark.streaming.pipeline import (
+        run_order_pipeline,
+    )
+
+    n_rows = _write_envelope_files(tmp_path / "input", 3, 12, key_bytes=100_000)
+    observed: list = []
+    run_order_pipeline(
+        spark, str(tmp_path / "input"), str(tmp_path / "work"), observed_metrics=observed
+    )
+    assert batch_partitions == [3]
+    assert sum(m["message_count"] for m in observed) == n_rows
+
+
+@pytest.mark.parametrize(
+    "callers_values",
+    [
+        dict.fromkeys(SPLIT_KEYS),
+        dict(zip(SPLIT_KEYS, ("3", "64m", "1m"))),
+    ],
+    ids=["unset", "set"],
+)
+def test_available_now_run_restores_split_conf(
+    spark, tmp_path, envelope_dir, callers_values
+):
+    from kafka_avro_order_processor_eg_4131_spark.streaming.pipeline import (
+        run_order_pipeline,
+    )
+
+    _set_split_conf(spark, callers_values)
+    try:
+        run_order_pipeline(spark, envelope_dir, str(tmp_path / "work"))
+        assert _split_conf(spark) == callers_values
+    finally:
+        _set_split_conf(spark, dict.fromkeys(SPLIT_KEYS))
+
+
+def test_continuous_run_restores_split_conf_when_stopped(
+    spark, tmp_path, envelope_dir
+):
+    import time
+
+    from kafka_avro_order_processor_eg_4131_spark.streaming.pipeline import (
+        SPLIT_CONFS,
+        run_order_pipeline,
+    )
+
+    unset = dict.fromkeys(SPLIT_KEYS)
+    assert _split_conf(spark) == unset
+    running = {q.id for q in spark.streams.active}
+    run_order_pipeline(spark, envelope_dir, str(tmp_path / "work"), available_now=False)
+    (query,) = [q for q in spark.streams.active if q.id not in running]
+    try:
+        query.processAllAvailable()
+        assert _split_conf(spark) == SPLIT_CONFS
+    finally:
+        query.stop()
+    # a thread waiting on the query releases the hold just after stop()
+    give_up = time.time() + 30.0
+    while _split_conf(spark) != unset and time.time() < give_up:
+        time.sleep(0.05)
+    assert _split_conf(spark) == unset
+
+
+def test_byte_split_holds_are_counted_per_session():
+    """Overlapping pipeline queries on one session share the setting:
+    it stays until the last one ends, and the caller's values come back
+    exactly once, also when holds and releases race on many threads."""
+    import sys
+    import threading
+
+    from kafka_avro_order_processor_eg_4131_spark.streaming.pipeline import (
+        SPLIT_CONFS,
+        _hold_byte_splits,
+        _release_byte_splits,
+    )
+
+    class StubConf(dict):
+        def set(self, key, value):
+            self[key] = value
+
+        def unset(self, key):
+            del self[key]
+
+    class StubSession:
+        def __init__(self, conf):
+            self.conf = StubConf(conf)
+
+    min_parts = SPLIT_KEYS[0]
+    spark = StubSession({min_parts: "3"})
+    _hold_byte_splits(spark)
+    _hold_byte_splits(spark)
+    _release_byte_splits(spark)
+    assert spark.conf == SPLIT_CONFS
+    _release_byte_splits(spark)
+    assert spark.conf == {min_parts: "3"}
+
+    spark = StubSession({})
+    errors: list[str] = []
+
+    def churn():
+        for _ in range(300):
+            _hold_byte_splits(spark)
+            if spark.conf != SPLIT_CONFS:
+                errors.append(f"held but read {dict(spark.conf)!r}")
+            _release_byte_splits(spark)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=churn) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert spark.conf == {}
